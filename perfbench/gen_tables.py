@@ -32,6 +32,11 @@ WORDS = ["a", "agg", "batch", "big", "column", "customer", "data", "fast",
 LANGS = ["en", "de", "es", "fr", "zh"]
 LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
 EMBED_DIM = 64
+# embedding_dedup_survivors pairs vectors at cosine >= 0.4: chance pairs
+# are kept below this margin, planted ones sit well above the threshold
+CHANCE_MARGIN = 0.3
+PLANTED_PAIRS = 10
+PLANTED_PATHS = 2
 
 ORDER_START = np.datetime64("1995-01-01")
 ORDER_DAYS = int((np.datetime64("2001-08-01") - ORDER_START).astype(int))
@@ -49,18 +54,20 @@ def _write(out_dir: str, name: str, cols: dict) -> None:
 
 def _documents(rng: np.random.Generator, n: int) -> dict:
     """Bag-of-words documents; one in twenty is a lightly edited copy of
-    another document (suffixed ``dup``), so the dedup families find
-    near-duplicate pairs."""
+    an earlier document (suffixed ``dup``), so the dedup families find
+    near-duplicate pairs. The document lengths and the number of copies
+    are the same for every seed; only which words and documents are
+    drawn changes."""
+    lengths = rng.permutation(np.linspace(10, 99, n).astype(int))
+    copies = set(rng.choice(np.arange(20, n), size=n // 20, replace=False).tolist())
     texts: list[str] = []
     for i in range(n):
-        if i >= 20 and rng.random() < 0.05:
+        if i in copies:
             words = texts[int(rng.integers(i))].split()
-            if len(words) > 3:
-                words[int(rng.integers(len(words)))] = WORDS[int(rng.integers(len(WORDS)))]
+            words[int(rng.integers(len(words)))] = WORDS[int(rng.integers(len(WORDS)))]
             texts.append(" ".join(words) + " dup")
         else:
-            k = int(rng.integers(10, 100))
-            texts.append(" ".join(rng.choice(WORDS, size=k)))
+            texts.append(" ".join(rng.choice(WORDS, size=int(lengths[i]))))
     return {
         "doc_id": pa.array(np.arange(n, dtype=np.int64)),
         "text": pa.array(texts),
@@ -71,14 +78,42 @@ def _documents(rng: np.random.Generator, n: int) -> dict:
 
 
 def _embeddings(rng: np.random.Generator, n: int) -> dict:
-    """Unit vectors drawn around ten weak label centroids."""
-    labels = rng.integers(0, 10, n).astype(np.int32)
+    """Unit vectors drawn around ten weak label centroids, ``n / 10`` per
+    label, with a near-duplicate graph (cosine >= 0.4) of the
+    same shape for every seed: ``PLANTED_PAIRS`` isolated pairs and
+    ``PLANTED_PATHS`` paths a - b - c whose ends are not near each other,
+    so connected components take the same number of rounds whatever the
+    seed. Chance near-duplicates are drawn again until none is left."""
+    labels = rng.permutation(np.arange(n) % 10).astype(np.int32)
     centroids = rng.normal(size=(10, EMBED_DIM))
-    x = rng.normal(size=(n, EMBED_DIM)) + 0.15 * centroids[labels]
-    x = (x / np.linalg.norm(x, axis=1, keepdims=True)).astype(np.float32)
+
+    def draw(k, lab):
+        x = rng.normal(size=(k, EMBED_DIM)) + 0.15 * centroids[lab]
+        return x / np.linalg.norm(x, axis=1, keepdims=True)
+
+    x = draw(n, labels)
+    same = labels[:, None] == labels[None, :]
+    np.fill_diagonal(same, False)
+    while True:
+        close = np.triu(same & (x @ x.T >= CHANCE_MARGIN))
+        redo = np.unique(np.nonzero(close)[1])
+        if redo.size == 0:
+            break
+        x[redo] = draw(redo.size, labels[redo])
+    # plant: ids taken per label in turn, so every structure sits in one block
+    by_label = [list(rng.permutation(np.nonzero(labels == b)[0])) for b in range(10)]
+    for k in range(PLANTED_PAIRS + PLANTED_PATHS):
+        block = by_label[k % 10]
+        if k < PLANTED_PAIRS:
+            a, b = block.pop(), block.pop()
+            v = x[a] + 0.2 * rng.normal(size=EMBED_DIM) / np.sqrt(EMBED_DIM)
+        else:
+            a, b, c = block.pop(), block.pop(), block.pop()
+            v = x[a] + x[c]
+        x[b] = v / np.linalg.norm(v)
     return {
         "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-        "embedding": pa.array(list(x), type=pa.list_(pa.float32())),
+        "embedding": pa.array(list(x.astype(np.float32)), type=pa.list_(pa.float32())),
         "label": pa.array(labels),
     }
 

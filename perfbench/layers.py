@@ -17,7 +17,7 @@ PER_LAYER = {
     "session.get_spark_s": ("s", "setup_s on both workloads"),
     "catalog.load_table_s": ("s", "op_s.p50 on query_mix"),
     "catalog.load_table_calls": ("count", "op_s.p50 on query_mix"),
-    "plans.construct_s": ("s", "op_s.p50 and cold_op_s.p50 on query_mix (analyst ops); "
+    "plans.construct_s": ("s", "op_s.p50 and cold_pass_s on query_mix (analyst ops); "
                                "op_s.p50 on monthly_etl, where it is the pipeline's "
                                "driver time outside Spark jobs"),
     "plans.py4j_calls": ("count", "op_s.p50 on query_mix and monthly_etl; repeats exactly "
@@ -41,8 +41,8 @@ PER_LAYER = {
     "spark.exec.shuffle_read_bytes": ("bytes", "pass_s.p50 on query_mix"),
     "spark.exec.spill_bytes": ("bytes", "pass_s.p50 on query_mix"),
     "spark.exec.input_bytes": ("bytes", "pass_s.p50 on query_mix; op_s.p50 on monthly_etl"),
-    "spark.cache.persisted_rdds_net": ("count", "peak_rss_mb, and the gap between op_s.p50 "
-                                                "and cold_op_s.p50, on both workloads"),
+    "spark.cache.persisted_rdds_net": ("count", "peak_rss_mb, and the gap between pass_s.p50 "
+                                                "and cold_pass_s, on both workloads"),
     # pipeline and storage
     "pipeline.validate_s": ("s", "op_s.p50 on monthly_etl"),
     "pipeline.validate.py4j_calls": ("count", "op_s.p50 on monthly_etl"),

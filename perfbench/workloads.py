@@ -10,7 +10,8 @@ is checked.
   oracle: the driver-bound analyst shapes (flagship merge, column
   profile) and the executor-bound corpus/graph operators
   (connected-component survivors, bigram model, k-core peeling). The cold
-  pass runs the ops in this fixed order; warm passes are seed-shuffled.
+  pass runs the ops in this fixed order; warm passes are seed-shuffled,
+  and the first of them runs untimed.
 """
 
 from __future__ import annotations
@@ -75,6 +76,10 @@ def _canonical(rows, cols: list[str]) -> list[tuple]:
 
 
 class QueryMix:
+    # the first warm pass still runs on a warming JIT (it is 15-25% slower
+    # than the next), so it is run untimed
+    UNTIMED_PASSES = 1
+
     def __init__(self, work: str, seed: int):
         self.sf_dir = os.path.join(work, "tables")
         self.seed = seed
@@ -95,11 +100,27 @@ class QueryMix:
             yield names
 
     def warm_up(self, spark) -> None:
-        """Set-up: load every input table through the catalog."""
+        """Set-up: load every input table through the catalog, then run a
+        join/aggregate/window query and a word count of the benchmark's
+        own, so the JVM's generic Spark SQL paths are compiled before the
+        cold pass, which then measures what is particular to each op."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
         from building_permissions_etl_spark import catalog
 
-        for t in catalog.TABLES:
-            catalog.load_table(spark, t, self.sf_dir).count()
+        t = {n: catalog.load_table(spark, n, self.sf_dir) for n in catalog.TABLES}
+        for df in t.values():
+            df.count()
+        rev = (t["lineitem"].join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
+               .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
+               .join(t["nation"], F.col("c_nationkey") == F.col("n_nationkey"))
+               .groupBy("n_name", F.year("o_orderdate").alias("y"))
+               .agg(F.sum("l_extendedprice").alias("rev"),
+                    F.countDistinct("o_custkey").alias("buyers")))
+        rank = F.rank().over(Window.partitionBy("y").orderBy(F.desc("rev")))
+        rev.withColumn("rk", rank).filter("rk <= 3").collect()
+        (t["documents"].select(F.explode(F.split("text", " ")).alias("w"))
+         .groupBy("w").count().orderBy(F.desc("count")).limit(10).collect())
 
     def run_op(self, spark, name: str, step):
         from building_permissions_etl_spark.plans import registry
@@ -178,6 +199,8 @@ def _short(rodzaj: str) -> str:
 
 
 class MonthlyEtl:
+    UNTIMED_PASSES = 0
+
     def __init__(self, work: str, seed: int):
         self.seed = seed
         self.inputs = os.path.join(work, "permits")
